@@ -162,7 +162,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = LocalSession.build(cpus, "graft-bench")
     // Round-10 calibration channel (the q111/q100 closer): a fixed
     // pointer-chase whose quiet-host cost is committed as
@@ -197,7 +198,11 @@ object Bench {
     // 3 iterations: iter 1 is the cold run (codegen/JIT/page-cache); iters
     // 2-3 are both steady, so "iter_times" demonstrates the within-JVM
     // steady-state spread directly (the ≤1.5× quiet signature) instead of
-    // conflating cold-vs-steady.
+    // conflating cold-vs-steady. Steady holds only while the gate's
+    // generated classes fit in Spark's codegen cache
+    // (LocalSession.CodegenCacheMaxEntries): a gate generating more classes
+    // than the bound evicts its own classes and recompiles them in every
+    // iteration. At Spark's default bound of 100, gates above 100 classes did.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     // Correctness-gate HARNESSES, not queries: their wall time measures
     // replay plumbing (temp-dir chunk writes, micro-batch scheduling,

@@ -1,19 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** One place for the local-mode session knobs shared by Verify, Bench and
   * the timing tools (MicroBench, Probe), so correctness runs and every
   * measurement use the same configuration. */
 object LocalSession {
 
-  /** Shuffle/checkpoint scratch on tmpfs when available. local[32] writes
+  /** Shuffle/checkpoint scratch on tmpfs when available. local[n] writes
     * shuffle files and localCheckpoint disk blocks to spark.local.dir; the
     * default (/tmp) sits on the shared VM's contended virtual disk, which
     * makes the checkpoint-heavy iterative gates (PageRank, connected
-    * components) hostage to neighbour IO during a measurement. The host has
-    * 128 GiB RAM and sf0.1 scratch peaks well under 1 GiB, so tmpfs is pure
-    * win locally. (Cluster deployments ignore this: spark.local.dir comes
+    * components) hostage to neighbour IO during a measurement. sf0.1
+    * scratch peaks well under 1 GiB, so tmpfs costs little memory.
+    * (Cluster deployments ignore this: spark.local.dir comes
     * from the cluster manager there, and this conf only applies to the
     * sessions THIS object builds.) Spark removes its spark-* subdirs on
     * clean shutdown; the dir itself is shared and tiny. */
@@ -159,6 +160,31 @@ object LocalSession {
     }
   }
 
+  /** Bound of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is an
+    * LRU keyed by generated source. One pass of the benchmark's
+    * batch_analytics job list (the iterative graph operators, corpus and
+    * embedding dedup, ANN, BM25) generates about 340 distinct classes, so
+    * at 100 each class is evicted before it comes round again and every
+    * warm pass recompiled all of them: 354 Janino compiles, 1.9 s of an
+    * 8 s pass on 4 vCPUs, and in local mode the executor tasks recompile
+    * the evicted whole-stage classes as well. 1000 is about 3× that working set; 4096
+    * leaves the same residual (~16 compiles per pass, from generated code
+    * that inlines per-call literals such as Long ids). Only compiled code
+    * is cached, never data or plan results.
+    *
+    * This is a static conf: `CodeGenerator` reads it once per JVM, when it
+    * first initializes, so it has to be set when the session is built. A
+    * later `conf.set`, or a builder in a JVM that already holds a
+    * SparkContext, leaves the first value in force. */
+  final val CodegenCacheMaxEntries = 1000
+
+  /** [[CodegenCacheMaxEntries]] as session-builder conf. The test suites'
+    * own session builders apply it too, so whichever builder starts a
+    * JVM's SparkContext sets the same bound. */
+  val codegenCacheConf: Map[String, Any] =
+    Map(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheMaxEntries)
+
   def build(cpus: String, appName: String = "graft"): SparkSession = {
     sweepStaleFixtures()
     val b0 = SparkSession.builder()
@@ -177,6 +203,7 @@ object LocalSession {
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       .config("spark.ui.enabled", "false")
+      .config(codegenCacheConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(s)

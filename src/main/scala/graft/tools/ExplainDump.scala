@@ -8,7 +8,8 @@ package graft.tools
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = graft.LocalSession.build(cpus, "graft-explain")
     val names = if (args.nonEmpty) args.toSeq else Seq("q36_neardup_jaccard")
     for (name <- names) {

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
 object MicroBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     val spark = graft.LocalSession.build(cpus, "graft-microbench")

@@ -26,6 +26,7 @@ class AdaptiveScaleSpec extends AnyFunSuite {
       .master("local[4]")
       .appName("AdaptiveScaleSpec")
       .config("spark.ui.enabled", "false")
+      .config(LocalSession.codegenCacheConf)
       .getOrCreate()
     base.sparkContext.setLogLevel("WARN")
     val s = base.newSession()

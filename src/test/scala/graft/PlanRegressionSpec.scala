@@ -46,6 +46,7 @@ class PlanRegressionSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config(LocalSession.codegenCacheConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(s)

@@ -21,6 +21,7 @@ object PropertySpec extends Properties("graft") {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalSession.codegenCacheConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -12,6 +12,7 @@ trait SparkSuite extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalSession.codegenCacheConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(s)

@@ -20,6 +20,7 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       .master("local[4]")
       .appName("StoragePartitionedJoinSpec")
       .config("spark.ui.enabled", "false")
+      .config(LocalSession.codegenCacheConf)
       .getOrCreate()
     base.sparkContext.setLogLevel("WARN")
     val s = base.newSession()
